@@ -270,7 +270,7 @@ object CrawlQueries {
   def urlSeenSharded(spark: SparkSession, sfDir: String): DataFrame = {
     val seeds = Fixtures.seeds(spark, sfDir, d => s"${Fixtures.base(d)}/list/p1.html")
     new Crawler(spark, Fixtures.corpus(spark, sfDir),
-      Crawler.Config(bloomThreshold = 0L, cuckooThreshold = 0L))
+      Crawler.Config(urlSeenThreshold = 0L))
       .crawl(listJob, seeds)
       .select(expr("cast(substring(seed_id, 2) as long)").as("doc_id"), col("url"))
       .distinct().orderBy("doc_id", "url")

@@ -244,7 +244,7 @@ final class Crawler(
         // worthless at these sizes (the batch broadcasts anyway).
         val seedParts = math.max(1L, math.min(
           spark.sparkContext.defaultParallelism.toLong,
-          (n + config.frontierRowsPerPartition - 1) / config.frontierRowsPerPartition)).toInt
+          (n + FrontierRowsPerPartition - 1) / FrontierRowsPerPartition)).toInt
         frontier = if (chk.rdd.getNumPartitions > seedParts) chk.coalesce(seedParts) else chk
         frontierCount = n
     }
@@ -342,11 +342,9 @@ final class Crawler(
     // spaced, so full scans amortize to O(total) over the whole crawl.
     var bloomFilter: Option[org.apache.spark.util.sketch.BloomFilter] = None
     var bloomCapacity = 0L
-    def cuckooActive(se: Long): Boolean = se > config.cuckooThreshold
     def insertIntoCuckoo(df: DataFrame): Unit = {
       val nShards = config.hostBuckets
-      val cap = config.cuckooCapacityPerShard
-      def freshPair() = (CuckooFilter.create(cap), SeenShard.create())
+      def freshPair() = (CuckooFilter.create(CuckooCapacityPerShard), SeenShard.create())
       val delta = df
         .select(pmod(col("url_hash"), lit(nShards)).cast("int").as("shard"),
           col("seed_id"), col("url_hash"))
@@ -465,7 +463,7 @@ final class Crawler(
           // both sides pay an exchange)
           val bKeys = b.select("seed_id", "url")
           val rest = frontier.join(
-            if (n <= config.broadcastJoinRows) broadcast(bKeys) else bKeys,
+            if (n <= BroadcastJoinRows) broadcast(bKeys) else bKeys,
             Seq("seed_id", "url"), "left_anti")
           (b, rest, n)
         case _ => (frontier, spark.emptyDataFrame, frontierCount)
@@ -617,14 +615,11 @@ final class Crawler(
       seen = seen.union(newSeen)
       seenEstimate += batchCount
 
-      if (cuckooActive(seenEstimate)) {
+      if (seenEstimate > config.urlSeenThreshold) {
         // first active round (incl. resume) backfills ALL of seen; after
         // that only the round's batch is inserted
         insertIntoCuckoo(if (cuckooPrimed) newSeen else seen)
         cuckooPrimed = true
-      }
-
-      if (seenEstimate > config.bloomThreshold) {
         if (bloomFilter.isEmpty || seenEstimate > bloomCapacity) {
           bloomCapacity = math.max(seenEstimate * 2, 1000L)
           bloomFilter = Some(seen.stat.bloomFilter("url_hash", bloomCapacity, 0.01))
@@ -658,62 +653,40 @@ final class Crawler(
       // seen table unnecessary (that join re-shuffled ALL of seen every
       // round: a union tree carries no stable partitioning — the last
       // per-round O(|seen|) term in the loop). Below the activation
-      // thresholds the plain anti-join remains (at small seen sizes it
-      // is cheaper than maintaining the shard structures).
+      // threshold the plain anti-join remains (at small seen sizes it is
+      // cheaper than maintaining the shard structures).
       val bloomOpt = bloomFilter.map(spark.sparkContext.broadcast(_))
       // successor dedup + frontier checkpoint as a (re)buildable plan: the
       // plan captures the CURRENT shard RDD, so the block-loss recovery
       // below can rebuild the shards from `seen` and re-plan.
       def dedupAndCheckpoint(): (DataFrame, Long) = {
-        val cuckooOn = cuckooPrimed && cuckooRdd.nonEmpty
         // seen's row count is DRIVER-KNOWN (seenEstimate is exact —
         // batches are disjoint from prior seen): below the threshold,
         // broadcast the seen side of the anti-join so neither side pays
         // an exchange (guide §3.1 — checkpointed leaves have no stats,
         // so the planner can never choose this itself; the successor
         // side then stays fused with the extraction stage). Above it,
-        // the previous sort-merge shape — and past cuckooThreshold the
-        // executor-resident shards replace this join entirely.
+        // the previous sort-merge shape — and past urlSeenThreshold the
+        // executor-resident shards replace this join entirely (the bloom
+        // and the shards activate in the same round).
         def seenSide: DataFrame =
-          if (seenEstimate <= config.broadcastJoinRows) broadcast(seen) else seen
-        val preFiltered =
-          if (!cuckooOn) {
-            val base = bloomOpt match {
-              case Some(bc) =>
-                val acc = prefilterSkipped
-                // reject branch counts; each bloom-skipped row increments
-                // the accumulator exactly once
-                val rejectCounted = udf { (h: Long) =>
-                  val might = bc.value.mightContain(h)
-                  if (!might) acc.add(1L)
-                  might
-                }
-                val quiet = udf((h: Long) => bc.value.mightContain(h))
-                val bloomNew = succHashed.filter(!rejectCounted(col("url_hash")))
-                bloomNew.unionByName(
-                  succHashed.filter(quiet(col("url_hash")))
-                    .join(seenSide, Seq("seed_id", "url_hash"), "left_anti"))
-              case None =>
-                succHashed.join(seenSide, Seq("seed_id", "url_hash"), "left_anti")
-            }
-            base
-          } else {
+          if (seenEstimate <= BroadcastJoinRows) broadcast(seen) else seen
+        val preFiltered = bloomOpt match {
+          case Some(bc) if cuckooPrimed && cuckooRdd.nonEmpty =>
             val acc = prefilterSkipped
-            val (bloomNew, bloomMaybe) = bloomOpt match {
-              case Some(bc) =>
-                val rejectCounted = udf { (h: Long) =>
-                  val might = bc.value.mightContain(h)
-                  if (!might) acc.add(1L)
-                  might
-                }
-                val quiet = udf((h: Long) => bc.value.mightContain(h))
-                (succHashed.filter(!rejectCounted(col("url_hash"))),
-                  succHashed.filter(quiet(col("url_hash"))))
-              case None => (spark.emptyDataFrame, succHashed)
+            // reject branch counts; each bloom-skipped row increments
+            // the accumulator exactly once
+            val rejectCounted = udf { (h: Long) =>
+              val might = bc.value.mightContain(h)
+              if (!might) acc.add(1L)
+              might
             }
-            val shardNew = cuckooProbeNew(bloomMaybe)
-            if (bloomNew.columns.nonEmpty) shardNew.unionByName(bloomNew) else shardNew
-          }
+            val quiet = udf((h: Long) => bc.value.mightContain(h))
+            cuckooProbeNew(succHashed.filter(quiet(col("url_hash"))))
+              .unionByName(succHashed.filter(!rejectCounted(col("url_hash"))))
+          case _ =>
+            succHashed.join(seenSide, Seq("seed_id", "url_hash"), "left_anti")
+        }
 
         val succ = preFiltered.select("seed_id", "url", "page_no", "cursor",
           "host", "url_hash", "host_bucket", "priority")
@@ -727,7 +700,7 @@ final class Crawler(
         val bound = batchCount + math.max(0L, remainderCount)
         val maxParts = math.max(1L, math.min(
           spark.sparkContext.defaultParallelism.toLong,
-          (bound + config.frontierRowsPerPartition - 1) / config.frontierRowsPerPartition)).toInt
+          (bound + FrontierRowsPerPartition - 1) / FrontierRowsPerPartition)).toInt
         // a successor may already be QUEUED (in the unfetched remainder)
         // even though not yet seen — anti-join against the remainder too,
         // keeping the earlier-queued row (BFS order), so no url is fetched
@@ -737,7 +710,7 @@ final class Crawler(
             val rKeys = remainder.select("seed_id", "url_hash")
             remainder.unionByName(
               succ.join(
-                if (remainderCount <= config.broadcastJoinRows) broadcast(rKeys) else rKeys,
+                if (remainderCount <= BroadcastJoinRows) broadcast(rKeys) else rKeys,
                 Seq("seed_id", "url_hash"), "left_anti"))
           } else succ,
           maxParts)
@@ -974,6 +947,25 @@ object Crawler {
     false
   }
 
+  // table capacity of each partitioned cuckoo URL-seen shard — overflow
+  // degrades to the victim stash, never false-negates
+  private val CuckooCapacityPerShard: Long = 1L << 18
+
+  // deliberate join strategy from driver-known row counts (guide §3.1):
+  // anti-join sides at or below this many rows are broadcast-hinted
+  // (checkpointed/persisted leaves carry no size stats, so the planner
+  // can never pick broadcast itself and defaults both sides into a
+  // sort-merge exchange). ~50 B/row ⇒ this caps the broadcast near
+  // 25 MB; above it the r5 sort-merge shape is kept (and past
+  // Config.urlSeenThreshold the shards replace the seen join entirely)
+  private val BroadcastJoinRows: Long = 500000L
+
+  // partition-cap granularity for the per-round frontier checkpoint
+  // (guide §2.2 "fewer, larger map tasks"): partitions are sized to
+  // hold this many frontier rows, so a 5k-url round checkpoints into
+  // ONE partition while a 10^7-url round keeps every core busy
+  private val FrontierRowsPerPartition: Long = 50000L
+
   final case class Config(
       politeness: Politeness.Config = Politeness.Config(),
       maxRounds: Int = 64,
@@ -991,33 +983,17 @@ object Crawler {
       // fetcher behavior); tests/bench leave the schedule virtual
       realPace: Boolean = false,
       broadcastFrontier: Boolean = true,
-      // bloom prefilter only pays once the exact anti-join's shuffle is the
-      // bottleneck (≈10^7+ seen urls); below that the extra bloom-build
-      // action + double scan per round costs more than it saves
-      bloomThreshold: Long = 10000000L,
-      // partitioned cuckoo URL-seen shards activate past this seen-set size
-      // (north star pairs them with the bloom); capacity sizes each shard's
-      // table — overflow degrades to the victim stash, never false-negates
-      cuckooThreshold: Long = 10000000L,
-      cuckooCapacityPerShard: Long = 1L << 18,
+      // past this seen-set size the URL-seen dedup switches from the plain
+      // anti-join to the broadcast bloom + partitioned cuckoo/exact shards.
+      // Both only pay once the exact anti-join's shuffle is the bottleneck
+      // (≈10^7+ seen urls); below that the extra bloom-build action, double
+      // scan and shard upkeep per round cost more than they save
+      urlSeenThreshold: Long = 10000000L,
       // storage level for the executor-resident URL-seen shard RDD;
       // MEMORY_AND_DISK lets an outgrown shard spill to executor-local
       // disk instead of failing (see SeenShard scaladoc sizing math).
       // Tests force "DISK_ONLY" to prove the crawl survives spilled shards.
       shardStorageLevel: String = "MEMORY_AND_DISK",
-      // deliberate join strategy from driver-known row counts (guide §3.1):
-      // anti-join sides at or below this many rows are broadcast-hinted
-      // (checkpointed/persisted leaves carry no size stats, so the planner
-      // can never pick broadcast itself and defaults both sides into a
-      // sort-merge exchange). ~50 B/row ⇒ the default caps the broadcast
-      // near 25 MB; above it the r5 sort-merge shape is kept (and past
-      // cuckooThreshold the shards replace the seen join entirely)
-      broadcastJoinRows: Long = 500000L,
-      // partition-cap granularity for the per-round frontier checkpoint
-      // (guide §2.2 "fewer, larger map tasks"): partitions are sized to
-      // hold this many frontier rows, so a 5k-url round checkpoints into
-      // ONE partition while a 10^7-url round keeps every core busy
-      frontierRowsPerPartition: Long = 50000L,
       // pluggable fetch stage: None = the default fused corpus scan-join
       // (fetch before schedule — a miss consumes no politeness slot);
       // Some(f) = politeness schedules + paces FIRST, then f.fetch() runs

@@ -263,8 +263,9 @@ object XPath {
     * of each context node), so the previous per-parent collection churn —
     * a lazy descendants Iterator (Stack + reverseIterator per node), a
     * `toVector` of candidates, and `zipWithIndex.filter.map` per
-    * predicate — was the extraction path's leading allocator (ParseBench:
-    * the xpath family allocated 3.5× the css families per page).
+    * predicate — was the extraction path's leading allocator
+    * (OPTIMIZATION_r06.md finding 6: the xpath family allocated 3.5× the
+    * css families per page; graftbench's `xpath` layer tracks it).
     * Candidates and predicate filtering reuse two scratch buffers; the
     * identity seen-set is only materialized when the context has several
     * nodes (a single context node cannot yield duplicate children /

@@ -204,7 +204,7 @@ class EngineSurfaceSpec extends AnyFunSuite {
     // repeat successors (the same p2/p3 urls discovered each round per
     // seed), so the prefilter has both prune and pass-through traffic
     val cr = new Crawler(spark, corpus,
-      Crawler.Config(bloomThreshold = 0L, cuckooThreshold = 0L))
+      Crawler.Config(urlSeenThreshold = 0L))
     val sketched = cr.crawl(CrawlQueries.listJob, seeds)
       .filter(col("item").isNotNull)
       .select("seed_id", "url", "page_no", "pos", "item.title").collect().map(_.toString).sorted
@@ -319,7 +319,7 @@ class EngineSurfaceSpec extends AnyFunSuite {
     // sketch must prime from the SNAPSHOT's seen set (not just new rounds)
     // or resumed crawls would re-fetch round-1 urls
     val tmp = java.nio.file.Files.createTempDirectory("graft-resume-sketch").toString
-    val cfg = Crawler.Config(checkpointDir = Some(tmp), bloomThreshold = 0L, cuckooThreshold = 0L)
+    val cfg = Crawler.Config(checkpointDir = Some(tmp), urlSeenThreshold = 0L)
     new Crawler(spark, corpus, cfg.copy(maxRounds = 1)).crawl(CrawlQueries.listJob, seeds).count()
     val resumedRows = new Crawler(spark, corpus, cfg)
       .crawl(CrawlQueries.listJob, seeds)

@@ -97,6 +97,28 @@ class HtmlParserSpec extends AnyFunSuite {
     assert(root.descendants.exists(e => e.tag == "p" && Text.innerText(e) == "ok"))
   }
 
+  test("close-tag name trim matches legacy String.trim: control chars strip, NBSP does not") {
+    // a close that matches <p> leaves the span as p's sibling; otherwise
+    // the span nests inside the still-open p
+    def closesP(close: String): Boolean = {
+      val root = HtmlParser.parse(s"<div><p>a$close<span>b</span></div>")
+      root.descendants.find(_.tag == "p").get.childElements.isEmpty
+    }
+    def legacyName(region: String): String =
+      region.trim.toLowerCase.takeWhile(!_.isWhitespace)
+    // \u0001 and \u0000 are <= ' ' but not isWhitespace; \u001F is both;
+    // \u00A0 (NBSP), \u2003 and \u3000 are > ' ', so String.trim keeps them
+    val regions = Seq("p\u0001", "P\u0000 ", "p \u0001", "p\u001F", "p\u00A0",
+      "\u00A0p\u00A0", "p\u2003", "p\u3000x", "p\u0001x", "pre")
+    for (r <- regions)
+      assert(closesP(s"</$r>") == (legacyName(r) == "p"), s"close region ${r.map(_.toInt)}")
+    assert(closesP("</p\u0001>"))
+    assert(!closesP("</p\u00A0>"))
+    // the name must start right after "</": a leading control char makes
+    // the whole run text, so <p> stays open
+    assert(!closesP("</\u001Fp>"))
+  }
+
   test("innerText: whitespace collapse + block newlines + table tabs") {
     val root = HtmlParser.parse(
       "<div>  hello \n  world <span>inline</span></div><p>para</p>" +

@@ -8,9 +8,9 @@ import graft.pipeline.Dedup
 /** Focused parity pins for the r6 minhash rewrite (Dedup.minhashSigUdf):
   * the ASCII byte-window shingle path, the shift-add Mersenne reduction
   * and the Int-packed signature must be BIT-IDENTICAL to the v1 UDF the
-  * DuckDB-gated operator shipped with — the LSH candidate set (band
-  * bucket hashes) and the est-prescreen (signature components) both hang
-  * off these values.
+  * DuckDB-gated operator shipped with (kept below as `minhashV1Udf`) —
+  * the LSH candidate set (band bucket hashes) and the est-prescreen
+  * (signature components) both hang off these values.
   */
 class MinhashParitySpec extends AnyFunSuite {
 
@@ -20,6 +20,45 @@ class MinhashParitySpec extends AnyFunSuite {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** The v1 one-pass minhash UDF, kept here as the bit-level reference for
+    * `Dedup.minhashSigUdf`: text → one element per band of
+    * (band index, band bucket hash, full signature), shingle-outer loop,
+    * mod-M by 64-bit division, signature as longs.
+    */
+  private def minhashV1Udf(k: Int, numPerm: Int, bands: Int)
+      : org.apache.spark.sql.expressions.UserDefinedFunction = {
+    val rows = numPerm / bands
+    val (pa, pb) = Dedup.permsFor(numPerm)
+    val M = (1L << 31) - 1 // Mersenne prime
+    udf { (text: String) =>
+      val hs = Dedup.shingleHashes(text, k)
+      val sig = Array.fill(numPerm)(Long.MaxValue)
+      var s = 0
+      while (s < hs.length) {
+        val h = ((hs(s) % M) + M) % M
+        var p = 0
+        while (p < numPerm) {
+          val v = (h * pa(p) + pb(p)) % M
+          if (v < sig(p)) sig(p) = v
+          p += 1
+        }
+        s += 1
+      }
+      // 64-bit FNV-1a fold of each band's rows
+      Array.tabulate(bands) { b =>
+        var h = 0xcbf29ce484222325L
+        var r = 0
+        while (r < rows) {
+          var v = sig(b * rows + r)
+          var byte = 0
+          while (byte < 8) { h ^= (v & 0xffL); h *= 0x100000001b3L; v >>>= 8; byte += 1 }
+          r += 1
+        }
+        (b, h, sig)
+      }
+    }
+  }
 
   private def xxRef(s: String): Long =
     org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
@@ -37,7 +76,7 @@ class MinhashParitySpec extends AnyFunSuite {
 
   test("shingleHashes: ASCII byte-window path == xxhash64(substring) reference") {
     for (t <- texts) {
-      val got = Dedup.shingleHashesPublic(t, 3).toSet
+      val got = Dedup.shingleHashes(t, 3).toSet
       val want = (0 to t.length - 3).map(i => xxRef(t.substring(i, i + 3))).toSet
       assert(got == want, s"shingle hash set diverged for '${t.take(30)}...'")
     }
@@ -47,12 +86,12 @@ class MinhashParitySpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    val v1 = df.select(col("doc_id"), explode(Dedup.minhashUdfPublic(3, 128, 16)(col("text"))).as("e"))
+    val v1 = df.select(col("doc_id"), explode(minhashV1Udf(3, 128, 16)(col("text"))).as("e"))
       .select(col("doc_id"), col("e._1").as("band"), col("e._2").as("bsig"), col("e._3").as("sig"))
       .collect()
       .map(r => ((r.getLong(0), r.getInt(1)), (r.getLong(2), r.getSeq[Long](3))))
       .toMap
-    val v2 = df.select(col("doc_id"), Dedup.minhashSigUdfPublic(3, 128, 16)(col("text")).as("s"))
+    val v2 = df.select(col("doc_id"), Dedup.minhashSigUdf(3, 128, 16)(col("text")).as("s"))
       .select(col("doc_id"), col("s._1").as("bh"), col("s._2").as("sig"))
       .collect()
     assert(v2.length == texts.length)

@@ -208,9 +208,9 @@ class ResilienceSpec extends AnyFunSuite {
 
   test("shard RDD lineage is truncated (localCheckpoint honored through the round action)") {
     val c = new Crawler(spark, corpus,
-      Crawler.Config(bloomThreshold = 0L, cuckooThreshold = 0L))
+      Crawler.Config(urlSeenThreshold = 0L))
     c.crawl(CrawlQueries.listJob, seeds).count()
-    assert(c.liveShards.isDefined, "sharded path must be active at zero thresholds")
+    assert(c.liveShards.isDefined, "sharded path must be active at a zero threshold")
     assert(c.liveShards.get.isCheckpointed,
       "shard RDD must be locally checkpointed by the round's fused action " +
         "(requires the checkpointAllMarkedAncestors local property)")
@@ -222,7 +222,7 @@ class ResilienceSpec extends AnyFunSuite {
     val expectedItems = itemRows(plain)
 
     val c = new Crawler(spark, corpus,
-      Crawler.Config(bloomThreshold = 0L, cuckooThreshold = 0L))
+      Crawler.Config(urlSeenThreshold = 0L))
     // simulate executor death at round 2: the previous generation's
     // locally-checkpointed (lineage-truncated) blocks vanish right before
     // the round's merge+probe consumes them
@@ -244,7 +244,7 @@ class ResilienceSpec extends AnyFunSuite {
     // plan, so without the snapshot/reset the metric double-counts. A
     // no-failure control run with the identical config gives the truth.
     val control = new Crawler(spark, corpus,
-      Crawler.Config(bloomThreshold = 0L, cuckooThreshold = 0L))
+      Crawler.Config(urlSeenThreshold = 0L))
     control.crawl(CrawlQueries.listJob, seeds).count()
     assert(c.prefilterSkipped.value == control.prefilterSkipped.value,
       s"block-loss retry must not double-count prefilterSkipped " +
@@ -254,7 +254,7 @@ class ResilienceSpec extends AnyFunSuite {
   test("shards forced to DISK_ONLY: crawl completes identically (spill-path)") {
     val plain = new Crawler(spark, corpus).crawl(CrawlQueries.listJob, seeds)
     val out = new Crawler(spark, corpus,
-      Crawler.Config(bloomThreshold = 0L, cuckooThreshold = 0L,
+      Crawler.Config(urlSeenThreshold = 0L,
         shardStorageLevel = "DISK_ONLY"))
       .crawl(CrawlQueries.listJob, seeds)
     assert(seenSet(out) == seenSet(plain))
